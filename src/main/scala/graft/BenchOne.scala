@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Single scaling measurement in a fresh JVM (spawned by Bench, optionally
   * under `taskset`): args = <master> <benchN> [reps]. Builds the wave
   * inputs ONCE, runs one untimed warm-up wave + `reps` timed waves over
-  * them, prints one line `URLS_PER_SEC <best>`.
+  * them, prints one line `URLS_PER_SEC <best>`. The wave is
+  * `Bench.waveFetch`: the engine's own dedup → politeness → fetch-join
+  * stages (CrawlJob) over a generated Zipf frontier.
   *
   * Why a subprocess: the fair N-vs-4N-executor comparison gives the
   * 1-executor baseline 1/4 of the MACHINE (8 pinned CPUs and their share of
@@ -56,34 +58,18 @@ object BenchOne {
       // prefer shuffled-hash over sort-merge: every big join in the wave
       // (seen anti-join, fetch left join) is a plain equi-join whose build
       // side fits executor memory per-partition — SHJ skips both sorts
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       // tmpfs shuffle scratch when it has headroom (ext4 scratch costs heavy
       // kernel time on this microVM — round-1 lesson re-learned in round 2:
       // a /tmp scratch dir halved 4-executor throughput)
-      .config("spark.local.dir", {
-        val shm = new java.io.File("/dev/shm")
-        if (shm.exists() && shm.getUsableSpace > 24L * (1L << 30))
-          "/dev/shm/graft-spark-one"
-        else "/tmp/graft-spark-one"
-      })
+      .config("spark.local.dir", Bench.localDir("graft-spark-one"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // per-executor quarter pinning (PinPlugin): each executor JVM tasksets
-    // itself to its own 8-core slice so host pressure hits the 1- and
-    // 4-executor configs symmetrically. local-cluster masters only — in
-    // local[n] mode the "executor" IS the whole JVM and pinning it to one
-    // quarter would throttle the 32-thread config to 8 cores.
-    val builderPinned =
-      if (master.startsWith("local-cluster") &&
-          sys.env.getOrElse("SPARK_GRAFT_PIN_QUARTERS", "").nonEmpty)
-        builder.config("spark.plugins", "graft.PinPlugin")
-      else builder
     // ad-hoc conf overrides for perf experiments:
     //   SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.foo=bar"
     val withConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foldLeft(builderPinned) { (b, kv) =>
+      .foldLeft(builder) { (b, kv) =>
         val Array(k, v) = kv.split("=", 2); b.config(k, v)
       }
     val spark = withConf.getOrCreate()

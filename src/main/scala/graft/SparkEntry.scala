@@ -32,7 +32,7 @@ object SparkEntry {
     * run. In a long same-session sweep (the bench queries phase runs ~104
     * queries in one 22 GB local[32] JVM) the leaked blocks squeeze the
     * unified memory pool's execution share and the measured effect is
-    * severe: a controlled A/B (BenchExtra, sf0.1) put the same name-ordered
+    * severe: a controlled same-session A/B (sf0.1) put the same name-ordered
     * sweep at 165.7 s without the cleanup and 98.0 s with it (q45 28→2.1 s,
     * q72 13.2→1.5 s, q44 11.6→1.5 s). Callers of this map (Bench, Verify,
     * TimeOne) all fully materialize each query before invoking the next, so

@@ -64,8 +64,8 @@ object WebCorpusQueries {
       // count): the rollup consumes map-side-combined (dst, anchor, n) rows
       // instead of a third full generate+aggregate pass over the raw anchor
       // stream, and `perAnchor` is one definition feeding both this rollup
-      // and `top` (identical aggregate subtrees, deduplicated at runtime by
-      // AQE shuffle-stage reuse; the static plan prints both)
+      // and `top` (identical aggregate subtrees, eligible for AQE exchange
+      // reuse; the static plan prints both)
       val inlinks = perAnchor.groupBy(col("dst_url"))
         .agg(sum(col("n")).as("n_inlinks"))
       inlinks.join(hosts, Seq("dst_url")).join(top, Seq("dst_url"))

@@ -90,42 +90,6 @@ object SeenSet {
     BloomState(seen.stat.bloomFilter("url", capacity, fpp), capacity, count, fpp)
   }
 
-  /** Full build with an EXPLICIT log-depth merge topology: per-partition
-    * Bloom filters combined through `treeAggregate(depth = 2)`, so at
-    * 1000 executors the bit-OR fan-in is a two-level combiner tree instead
-    * of an all-partitions-to-driver reduce. Result is merge-compatible
-    * with `buildState`'s filters (same capacity/fpp → same bit geometry;
-    * Bloom OR is associative and commutative, so partition order is
-    * irrelevant). The default `buildState` keeps Spark's own columnar
-    * sketch aggregate (no row conversion); this path exists where the
-    * merge topology must be explicit — SeenSetSpec pins the two builds
-    * behave identically as seen-set prefilters.
-    */
-  def buildStateTree(seen: DataFrame, count: Long, fpp: Double = 0.03): BloomState = {
-    fullBuilds.incrementAndGet()
-    val capacity = math.max(4 * math.max(count, 1L), 1L << 20)
-    // Filters are created LAZILY inside each partition: a treeAggregate
-    // zero value would serialize the full capacity-sized bit array into the
-    // task binary and ship one copy to every task (GBs at the 4×-count
-    // capacities the scaladoc's 1000-executor deployment implies — the r5
-    // advisor item). Each non-empty partition allocates its own local
-    // filter; the tree reduce then merges partition filters log-depth.
-    val perPart = seen.select(col("url")).na.drop()
-      .rdd.map(_.getString(0))
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val bf = BloomFilter.create(capacity, fpp)
-          it.foreach(bf.putString)
-          Iterator.single(bf)
-        }
-      }
-    val bloom =
-      if (perPart.isEmpty()) BloomFilter.create(capacity, fpp)
-      else perPart.treeReduce((a, b) => { a.mergeInPlace(b); a }, depth = 2)
-    BloomState(bloom, capacity, count, fpp)
-  }
-
   /** OR this wave's increment into the running filter — O(|increment|),
     * never rescans the accumulated seen set. Mutates and returns the state
     * (the caller must re-broadcast: the previous broadcast's value object
@@ -248,9 +212,59 @@ object SeenSet {
     definitelyNew.union(maybeSeen.join(seen, Seq("url"), "left_anti"))
   }
 
-  /** Spec/bench convenience: build state + filter in one shot (the wave
-    * loop maintains the state across waves instead).
+  // ---- the wave loop's seen filter ---------------------------------------
+
+  /** Seen filter with incremental sketch state, shared by the crawl wave
+    * loop (CrawlJob), the bench's scaling wave and the streaming
+    * micro-batch crawl: the exact anti-join, optionally prefiltered by a
+    * Bloom (`bloom`) or sharded cuckoo (`cuckoo`) sketch. A sketch
+    * bootstraps once from the full seen set — sized by the running seen
+    * count, counted here from `seen0` — then absorbs each increment
+    * (`absorb`); it is rebuilt from the full seen set only when it outgrows
+    * its 4× headroom, so total build work is O(final |seen|).
     */
-  def buildCuckoo(seen: DataFrame, expected: Long, nShards: Int = 32): CuckooState =
-    buildCuckooState(seen, expected, nShards)
+  final class Filter(bloom: Boolean, cuckoo: Boolean, seen0: DataFrame) {
+    private val sketched = bloom || cuckoo
+    private var count: Long = if (sketched) seen0.count() else 0L
+    private var bloomState: Option[BloomState] = None
+    // caller-managed broadcast of the running Bloom, destroyed whenever it
+    // is refreshed (never one undisposed broadcast per wave)
+    private var bloomBc: Option[Broadcast[BloomFilter]] = None
+    private var cuckooState: Option[CuckooState] = None
+
+    /** Rows of `cand` whose url is not in `seen` — exact. */
+    def apply(cand: DataFrame, seen: DataFrame): DataFrame =
+      if (bloom) {
+        if (bloomState.forall(_.overfull)) {
+          bloomBc.foreach(_.destroy())
+          bloomState = Some(buildState(seen, count))
+          bloomBc = Some(seen.sparkSession.sparkContext.broadcast(bloomState.get.bloom))
+        }
+        filterNewBc(cand, bloomBc.get, seen)
+      } else if (cuckoo) {
+        if (cuckooState.forall(_.overfull))
+          cuckooState = Some(buildCuckooState(seen, count))
+        filterNewCuckoo(cand, cuckooState.get, seen)
+      } else cand.join(seen, Seq("url"), "left_anti")
+
+    /** Fold urls just added to the seen set into the sketch: O(|inc|), no
+      * full-seen rescan. The Bloom's broadcast is replaced here, so a frame
+      * filtered through the old one (`inc` itself, typically) must be
+      * materialized before it is read again.
+      */
+    def absorb(inc: DataFrame): Unit = if (sketched) {
+      val incCount = inc.count()
+      count += incCount
+      bloomState = bloomState.map { st =>
+        val merged = mergeIncrement(st, inc.select(col("url")), incCount)
+        bloomBc.foreach(_.destroy())
+        bloomBc = Some(inc.sparkSession.sparkContext.broadcast(merged.bloom))
+        merged
+      }
+      cuckooState = cuckooState.map(updateCuckoo(_, inc.select(col("url")), incCount))
+    }
+
+    /** Release the sketch broadcast. */
+    def close(): Unit = bloomBc.foreach(_.destroy())
+  }
 }

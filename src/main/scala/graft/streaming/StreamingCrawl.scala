@@ -63,30 +63,26 @@ object StreamingCrawl {
       seenTablePath: String,
       sinks: Seq[DataFrame => Unit]) = {
     // Incremental Bloom across micro-batches (the closure lives for the
-    // query lifetime): bootstrap once from the persisted seen table, then
-    // absorb each batch's fresh urls via associative mergeInPlace — the
-    // same no-per-batch-rebuild rule as the batch wave loop (CrawlJob).
-    var bloomState: Option[graft.state.SeenSet.BloomState] = None
+    // query lifetime): the same seen filter as the batch wave loop
+    // (SeenSet.Filter) — bootstrapped once, when the persisted seen table
+    // first exists, then absorbing each batch's fresh urls; no per-batch
+    // rebuild. Its Bloom prefilter skips the anti-join shuffle for the
+    // definitely-new majority; the exact anti-join runs only on maybe-seen
+    // rows.
+    var seenFilter: Option[graft.state.SeenSet.Filter] = None
     urlStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val seenExists = new java.io.File(seenTablePath).exists()
-        val seen =
-          if (seenExists) spark.read.parquet(seenTablePath)
-          else batch.sparkSession.emptyDataFrame.withColumn("url", lit(""))
-            .limit(0)
         val batchUrls = batch.select(col("url")).distinct()
-        // same scale story as the batch path (graft.state.SeenSet): Bloom
-        // prefilter skips the anti-join shuffle for the definitely-new
-        // majority; the exact anti-join runs only on maybe-seen rows.
         val fresh =
-          if (seenExists) {
-            if (bloomState.isEmpty || bloomState.exists(_.overfull))
-              bloomState =
-                Some(graft.state.SeenSet.buildState(seen, seen.count()))
-            graft.state.SeenSet.filterNew(batchUrls,
-              graft.state.SeenSet.Layered(bloomState.get.bloom, seen))
-          } else batchUrls
+          if (!new java.io.File(seenTablePath).exists()) batchUrls
+          else {
+            val seen = spark.read.parquet(seenTablePath)
+            val f = seenFilter.getOrElse(new graft.state.SeenSet.Filter(
+              bloom = true, cuckoo = false, seen))
+            seenFilter = Some(f)
+            f(batchUrls, seen)
+          }
         val fetched = fresh.join(
           pages.select(col("url"), col("status"), col("text")),
           Seq("url"), "left")
@@ -94,10 +90,9 @@ object StreamingCrawl {
         try {
           sinks.foreach(_(fetched))
           fresh.write.mode("append").parquet(seenTablePath)
-          // fresh is persisted via fetched's cache — count is cheap; the
-          // merged filter covers this batch's appends for the next batch
-          bloomState = bloomState.map(st =>
-            graft.state.SeenSet.mergeIncrement(st, fresh, fresh.count()))
+          // the absorbed increment covers this batch's appends for the
+          // next batch
+          seenFilter.foreach(_.absorb(fresh))
         } finally fetched.unpersist()
         ()
       }

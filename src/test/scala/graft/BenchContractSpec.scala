@@ -52,4 +52,16 @@ class BenchContractSpec extends AnyFunSuite {
     assert((parsed \ "queries").values.asInstanceOf[Map[String, _]].isEmpty)
     assert((parsed \ "queries_omitted").values.asInstanceOf[BigInt] == 56)
   }
+
+  test("queries_failed is always on the contract line and counts failures") {
+    val extra = Seq("bench_frontier_urls" -> "8000000", "budget_sec" -> "420")
+    for (failed <- Seq(0, 3)) {
+      val base = Bench.contractBase(178.504, "/root/testdata/sf0.1", failed, extra)
+      val parsed = JsonMethods.parse(Bench.compactLine(base, queries(56)))
+      assert((parsed \ "queries_failed").values == BigInt(failed))
+      assert((parsed \ "value").values == 178.504)
+      assert((parsed \ "budget_sec").values == BigInt(420))
+      assert((parsed \ "detail").values == "BENCH_LAST.json")
+    }
+  }
 }

@@ -300,4 +300,16 @@ class CrawlJobSpec extends AnyFunSuite {
     val res = CrawlJob.run(spark, spec, pagesDf)
     assert(auditKinds(res)("fetch_miss") == 1)
   }
+
+  test("side-job pool is per run: no crawl-side-job thread outlives run") {
+    def sideThreads = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread])
+      .filter(t => t.getName == "crawl-side-job" && t.isAlive)
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", maxWaves = 3)
+    val res = CrawlJob.run(spark, spec, pagesDf)
+    assert(res.lineage.count() > 0) // the side pool ran this crawl's jobs
+    assert(sideThreads.isEmpty,
+      s"${sideThreads.length} crawl-side-job thread(s) alive after run")
+  }
 }

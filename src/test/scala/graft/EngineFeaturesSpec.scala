@@ -646,7 +646,8 @@ class EngineFeaturesSpec extends AnyFunSuite {
       val spec = CrawlSpec(startUrls = Seq("http://mega.example.com/"),
         parserId = "all_links", hostTokensPerWave = 10, maxWaves = 20)
       CrawlJob.run(spark, spec, pagesDf)
-      Thread.sleep(3000) // QueryExecutionListener delivery is async
+      // QueryExecutionListener delivery is async: drain the bus
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
       val windowLines = plans.synchronized {
         plans.flatMap(_.linesIterator).map(_.trim)
           .filter(l => l.contains("Window [") || l.contains("WindowExec"))
@@ -765,7 +766,8 @@ class EngineFeaturesSpec extends AnyFunSuite {
       val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
         parserId = "quotes", maxWaves = 2)
       CrawlJob.run(spark, spec, pagesDf)
-      Thread.sleep(3000) // QueryExecutionListener delivery is async
+      // QueryExecutionListener delivery is async: drain the bus
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
       // the robots rules checkpoint plan joins corpus ⋈ newHosts on
       // robots_url — it must be a BroadcastHashJoin with the tiny host
       // set as the build side, never an exchange of the corpus

@@ -35,32 +35,41 @@ class SeenSetSpec extends AnyFunSuite {
     assert(want.size == 10000)
   }
 
-  test("treeAggregate build: no false negatives, merge-compatible with " +
-      "the default build, identical prefilter results") {
+  test("buildState prefilter: no false negatives, equals the exact anti-join") {
     val seen = (0 until 30000 by 2)
       .map(i => s"http://h${i % 97}.example.com/p/$i").toDF("url")
-      .repartition(16) // force a real multi-partition combiner tree
+      .repartition(16)
     val cand = (0 until 30000)
       .map(i => s"http://h${i % 97}.example.com/p/$i").toDF("url")
-    val tree = SeenSet.buildStateTree(seen, 15000, fpp = 0.2)
-    val flat = SeenSet.buildState(seen, 15000, fpp = 0.2)
-    // no false negatives through the log-depth merge
+    val st = SeenSet.buildState(seen, 15000, fpp = 0.2) // high fpp on purpose
     val misses = seen.collect().map(_.getString(0))
-      .count(u => !tree.bloom.mightContain(u))
+      .count(u => !st.bloom.mightContain(u))
     assert(misses == 0)
-    // same (capacity, fpp) → same bit geometry → mergeInPlace-compatible
-    assert(tree.capacity == flat.capacity)
-    tree.bloom.mergeInPlace(flat.bloom) // throws on incompatible layouts
-    // both builds confirm down to the exact same new-candidate set
-    val bcT = spark.sparkContext.broadcast(
-      SeenSet.buildStateTree(seen, 15000, fpp = 0.2).bloom)
-    val gotTree = SeenSet.filterNewBc(cand, bcT, seen)
+    val bc = spark.sparkContext.broadcast(st.bloom)
+    val got = SeenSet.filterNewBc(cand, bc, seen)
       .collect().map(_.getString(0)).toSet
     val want = cand.join(seen, Seq("url"), "left_anti")
       .collect().map(_.getString(0)).toSet
-    assert(gotTree == want)
+    assert(got == want)
     assert(want.size == 15000)
-    bcT.destroy()
+    bc.destroy()
+  }
+
+  test("Filter: every mode equals the exact anti-join, before and after absorb") {
+    def urls(r: Range) = r.map(i => s"http://h${i % 31}.example.com/p/$i").toDF("url")
+    val seen0 = urls(0 until 4000 by 2)
+    val inc = urls(4000 until 5000)
+    val seen1 = seen0.union(inc)
+    val cand = urls(0 until 6000)
+    def set(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getString(0)).toSet
+    for ((bloom, cuckoo) <- Seq((false, false), (true, false), (false, true))) {
+      val f = new SeenSet.Filter(bloom, cuckoo, seen0)
+      assert(set(f(cand, seen0)) == set(cand.join(seen0, Seq("url"), "left_anti")))
+      f.absorb(inc)
+      assert(set(f(cand, seen1)) == set(cand.join(seen1, Seq("url"), "left_anti")))
+      f.close()
+    }
   }
 
   test("bloomDedup crawl is result-identical to exact-only crawl " +
